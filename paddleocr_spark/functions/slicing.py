@@ -5,9 +5,10 @@ and the poster-mode recursive window walk (tools/infer/predict_det.py
 :307-408, kernels/slice.detect_poster).
 
 Both run the REAL chain end-to-end — render -> PNG -> decode ->
-sliced/poster detection -> crop -> rec — and are pinned by the same
-byte-exact oracle as ocr_extract_text: the concatenated recognized text
-must equal norm(documents.text). Narrow per-doc maps, no shuffle.
+kernels/ocr.ocr_chain with sliced/poster detection in place of
+whole-page det — and are pinned by the same byte-exact oracle as
+ocr_extract_text: the concatenated recognized text must equal
+norm(documents.text). Narrow per-doc maps, no shuffle.
 
 Poster pages wrap at 9 chars/line (w=324, window=243): every window
 boundary lands mod 80 in {3, 6, 9, 12}, outside the 24..52 ink bands,
@@ -27,8 +28,8 @@ POSTER_WRAP = 9
 
 
 def _extract_with(pages: DataFrame, detect) -> DataFrame:
-    """pages -> per-url joined text via a custom detection strategy
-    (boxes = detect(img, det_model)), then the standard crop+rec tail.
+    """pages -> per-url joined text through kernels/ocr.ocr_chain with a
+    custom detection strategy (boxes = detect(img, det_model)).
 
     Same deployment discipline as the flagship plans/pipeline path: the
     engine is the per-python-worker singleton (a real model session must
@@ -37,10 +38,8 @@ def _extract_with(pages: DataFrame, detect) -> DataFrame:
     from paddleocr_spark.plans.pipeline import salted_repartition
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from paddleocr_spark.kernels.geometry import sorted_boxes
-        from paddleocr_spark.kernels.ocr import get_rotate_crop_image
+        from paddleocr_spark.kernels.ocr import ocr_chain
         from paddleocr_spark.kernels.png import decode_gray_png
-        from paddleocr_spark.kernels.rec import recognize_crops
         from paddleocr_spark.plans.pipeline import _get_engine
 
         eng = _get_engine()
@@ -48,11 +47,9 @@ def _extract_with(pages: DataFrame, detect) -> DataFrame:
             urls, texts = [], []
             for url, payload in zip(pdf["url"], pdf["html"]):
                 img = decode_gray_png(bytes(payload))
-                boxes = sorted_boxes(detect(img, eng.det_model))
-                crops = [get_rotate_crop_image(img, b) for b in boxes]
-                rec = recognize_crops(crops, eng.rec_model)
+                spans, _, _ = ocr_chain(img, eng, detect=detect)
                 urls.append(url)
-                texts.append("".join(t for t, _ in rec))
+                texts.append("".join(s["text"] for s in spans))
             yield pd.DataFrame({"url": urls, "joined_text": texts})
 
     ncpu = pages.sparkSession.sparkContext.defaultParallelism

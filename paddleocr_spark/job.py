@@ -155,13 +155,20 @@ def main(argv: list[str] | None = None) -> int:
               file=sys.stderr)
         return 2
 
+    from pyspark.errors import PySparkRuntimeError
     from pyspark.sql import SparkSession
 
     # getOrCreate() may hand us a pre-existing session (e.g. pytest's shared
     # fixture when main() runs in-process); stopping one we did not create
     # would kill that host's SparkContext for everything after us, so every
     # exit path goes through _stop() which only stops a session we built.
-    pre_existing = SparkSession.getActiveSession() is not None
+    # active() is this thread's active session or else the process-wide
+    # default one (getActiveSession alone is thread-local).
+    try:
+        SparkSession.active()
+        pre_existing = True
+    except PySparkRuntimeError:
+        pre_existing = False
 
     builder = SparkSession.builder.appName("paddleocr-spark-extract")
     if args.master:

@@ -1,18 +1,11 @@
-"""Orientation handling: per-crop 0/180 classification and page-level
-rotation search.
-
-Per-crop semantics from the reference text classifier
-(tools/infer/predict_cls.py:67-137 + cls_postprocess.py): label space
-["0","180"], rotate the crop 180 degrees only when the "180" score
-exceeds cls_thresh=0.9. Our deterministic model scores an orientation by
-the mean template correlation of its recognized glyphs — the orientation
-that reads better wins (a real ONNX classifier drops in behind
-`classify`).
+"""Orientation handling: page-level rotation search.
 
 Page-level semantics from the fork's rotation sweep
 (fastapi_app.py:304-455): try prioritized angles, score each by how much
 readable horizontal text it yields, early-exit on a confident hit,
-prefer 0 on ties.
+prefer 0 on ties. Probes are scored by rec read confidence, or — with
+the bundle's cls net (onnx_models.OnnxClsModel, the reference's
+predict_cls.py text-direction classifier) — by its p("0").
 """
 
 from __future__ import annotations
@@ -23,10 +16,8 @@ import numpy as np
 
 from .ctc import ctc_decode
 from .font import REC_CHARSET
-from .imageops import rot90k, rotate180
+from .imageops import rot90k
 from .rec import RecModel, rec_resize
-
-CLS_THRESH = 0.9
 
 # The fork's exact page-orientation scoring rubric
 # (fastapi_app.py:365-408): +2 per IC-header keyword, +3 for an IC
@@ -131,27 +122,6 @@ def _read_score(crop: np.ndarray, model: RecModel) -> float:
     return conf
 
 
-def classify(crop: np.ndarray, model: RecModel | None = None) -> tuple[str, float, np.ndarray]:
-    """Returns (label, score, possibly-rotated crop)."""
-    model = model or RecModel()
-    s0 = _read_score(crop, model)
-    flipped = rotate180(crop)
-    s180 = _read_score(flipped, model)
-    total = s0 + s180
-    if total <= 1e-9:
-        return "0", 0.5, crop
-    score180 = s180 / total
-    if score180 > 0.5:
-        label, score = "180", score180
-    else:
-        label, score = "0", 1.0 - score180
-    # Reference rotates only when the 180 score clears cls_thresh
-    # (predict_cls.py:133-136); otherwise the crop passes through as-is.
-    if label == "180" and score > CLS_THRESH:
-        return label, score, flipped
-    return label, score, crop
-
-
 # cls-probe early exit: measured corpus-wide (sf0.001 + sf0.01, all 4
 # sweep angles, 5,500 pages — see tests/test_onnx.py), wrong-angle mean
 # p(0) <= 0.59. 0.65 sits safely above it, so early exit NEVER fires
@@ -160,6 +130,13 @@ def classify(crop: np.ndarray, model: RecModel | None = None) -> tuple[str, floa
 # comparison, where the worst per-page correct-vs-wrong gap is +0.04
 # (0/5,500 pages chose a wrong angle in the corpus check).
 CLS_PROBE_EARLY_EXIT = 0.65
+# rec-probe early exit, measured on the sf0.01 corpus: correct-orientation
+# probes score >= 0.973, wrong-orientation 180-symmetric glyph reads
+# <= 0.857; 0.93 splits the gap, so early exit never fires on a wrong
+# angle.
+REC_PROBE_EARLY_EXIT = 0.93
+# lines scored per probed angle
+PROBE_BOXES = 3
 
 
 def orient_page(
@@ -167,54 +144,55 @@ def orient_page(
     detect_fn,
     crop_fn,
     rec_model: RecModel | None = None,
-    priority: tuple[int, ...] | None = None,
-    probe_boxes: int = 3,
-    # None resolves per backend below: 0.93 for rec-probe scoring
-    # (measured on the sf0.01 corpus: correct-orientation probes score
-    # >= 0.973, wrong-orientation 180-symmetric glyph reads <= 0.857 —
-    # 0.93 splits the gap, early exit never fires on a wrong angle) and
-    # CLS_PROBE_EARLY_EXIT for cls_model scoring. A None sentinel, not
-    # a magic-value compare: a caller explicitly passing 0.93 gets 0.93
-    # on either backend (round-4 advice).
-    early_exit: float | None = None,
     cls_model=None,
 ) -> tuple[np.ndarray, int]:
-    """Prioritized rotation sweep scored by recognition confidence of up
-    to `probe_boxes` detected lines (the fork scores candidate angles by
-    OCR quality and early-exits on a confident hit,
-    fastapi_app.py:365-408); ties keep the earliest priority angle.
+    """Rotation sweep scored by the recognition confidence of up to
+    PROBE_BOXES detected lines (the fork scores candidate angles by OCR
+    quality and early-exits on a confident hit, fastapi_app.py:365-408);
+    ties keep the earliest angle.
+
+    A coarse geometric vote (rotation.estimate_rotation) picks the text
+    axis first, as the fork's prioritized candidate list does
+    (fastapi_app.py:316-323): the sweep tries that axis's two angles,
+    then the other axis's. Once the voted axis has found a line, only a
+    probe that clears the early-exit bar may move the page off it: on an
+    upside-down page a 90/270 probe can read a few points more
+    confidently than the correct 180 one, while the bar is set so that
+    it never fires on a wrong angle. The other axis still wins outright
+    when the voted axis finds no line, or when the vote is wrong on a
+    small, near-square page and the other axis reads confidently.
 
     With `cls_model` (an onnx_models.OnnxClsModel from the broadcast
     bundle), probes are scored by the classifier's p("0") instead of rec
     read confidence — the reference's dedicated text-direction net
     (predict_cls.py) doing the angle scoring, through the same
     per-process ONNX session cache as det/rec."""
-    if early_exit is None:
-        early_exit = CLS_PROBE_EARLY_EXIT if cls_model is not None else 0.93
-    rec_model = rec_model or RecModel()
-    if priority is None:
-        # Coarse geometric vote picks the axis first (the fork's
-        # prioritized candidate list, fastapi_app.py:316-323): a
-        # 90/270-rotated page then skips the two useless upright probes.
-        from .rotation import estimate_rotation
+    from .rotation import estimate_rotation
 
-        axis, _ = estimate_rotation(img)
-        priority = (0, 180, 90, 270) if axis == 0 else (90, 270, 0, 180)
-    best_angle, best_score = priority[0], -1.0
-    for angle in priority:
-        rotated = rot90k(img, angle // 90) if angle else img
-        boxes, _ = detect_fn(rotated)
-        if len(boxes) == 0:
-            continue
-        crops = [crop_fn(rotated, box) for box in boxes[:probe_boxes]]
-        if cls_model is not None:
-            confs = cls_model.prob0_batch(crops)  # one batched run
-        else:
-            confs = [_read_score(c, rec_model) for c in crops]
-        score = float(np.mean(confs)) if confs else 0.0
-        if score >= early_exit:
-            return rotated, angle
-        if score > best_score + 1e-9:
-            best_angle, best_score = angle, score
+    if cls_model is not None:
+        early_exit = CLS_PROBE_EARLY_EXIT
+    else:
+        early_exit = REC_PROBE_EARLY_EXIT
+        rec_model = rec_model or RecModel()
+    axis, _ = estimate_rotation(img)
+    axes = ((0, 180), (90, 270)) if axis == 0 else ((90, 270), (0, 180))
+    best_angle, best_score = axes[0][0], -1.0
+    for angles in axes:
+        settled = best_score >= 0.0  # an earlier axis found a line
+        for angle in angles:
+            rotated = rot90k(img, angle // 90) if angle else img
+            boxes, _ = detect_fn(rotated)
+            if len(boxes) == 0:
+                continue
+            crops = [crop_fn(rotated, box) for box in boxes[:PROBE_BOXES]]
+            if cls_model is not None:
+                confs = cls_model.prob0_batch(crops)  # one batched run
+            else:
+                confs = [_read_score(c, rec_model) for c in crops]
+            score = float(np.mean(confs))
+            if score >= early_exit:
+                return rotated, angle
+            if not settled and score > best_score + 1e-9:
+                best_angle, best_score = angle, score
     rotated = rot90k(img, best_angle // 90) if best_angle else img
     return rotated, best_angle

@@ -1,10 +1,12 @@
 """The end-to-end extraction pipeline as a Spark plan.
 
 Shape (SURVEY.md §3.6): pages scan -> resume anti-join -> salted
-repartition on url-hash -> mapInPandas OCR stage (decode + det + order +
-crop + rec + CTC + drop_score, all inside one Arrow-batched UDF so crops
-never cross the Arrow boundary) -> per-row results + per-partition audit
-rows.
+repartition on url-hash -> mapInPandas extraction stage -> per-row
+results + per-partition audit rows. Inside the one Arrow-batched UDF a
+route table sends each payload to one handler: HTML to the DOM
+main-content strip, born-digital PDF to content-stream text, everything
+else to decode + kernels/ocr.ocr_chain (det + order + crop + rec + CTC +
+drop_score), so crops never cross the Arrow boundary.
 
 Scale notes (the parts that matter at 10^12 docs / 1000 executors):
 - The only shuffle is the salted repartition; everything downstream is
@@ -36,12 +38,19 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from paddleocr_spark.kernels import font, multipage, ocr, pdf
+from paddleocr_spark.operators import html_extract
+
 RESULTS_SCHEMA = (
     "url string, img_idx int, "
     "spans array<struct<box: array<array<float>>, text: string, score: float>>, "
     "extracted_text string, n_spans int, "
     "decode_ms double, det_ms double, rec_ms double"
 )
+RESULT_COLUMNS = [
+    "url", "img_idx", "spans", "extracted_text", "n_spans",
+    "decode_ms", "det_ms", "rec_ms",
+]
 
 AUDIT_SCHEMA = (
     "run_id string, partition_id int, url_count long, page_count long, "
@@ -55,71 +64,41 @@ _ENGINE = None  # per-python-worker singleton
 def _get_engine():
     global _ENGINE
     if _ENGINE is None:
-        from paddleocr_spark.kernels.ocr import OcrEngine
-
-        _ENGINE = OcrEngine()
+        _ENGINE = ocr.OcrEngine()
     return _ENGINE
 
 
 def _ocr_batches(
-    batches: Iterator[pd.DataFrame],
-    page_limit: int,
-    orient: bool = False,
-    weights_bc=None,
+    batches: Iterator[pd.DataFrame], page_limit: int, orient: bool, weights_bc
 ) -> Iterator[pd.DataFrame]:
-    """Install broadcast model weights for the duration of this task,
-    then run the OCR loop. Install-and-restore (not install-forever):
+    """Install the broadcast model weights for the duration of this task,
+    then run the routes. Install-and-restore (not install-forever):
     python workers are reused across queries, and a task must not leak
     its weights into later tasks that bypass extract_pages. This is the
     ship-weights-once deployment pattern (north_star 'broadcast model
-    weights'); with ONNX models the session would load the broadcast
-    bytes here."""
-    if weights_bc is None:
-        yield from _ocr_batches_run(batches, page_limit, orient)
-        return
+    weights'). An ONNX bundle becomes per-process cached sessions
+    (onnx_rt.session_for — the create_predictor analogue) swapped into
+    the worker's engine singleton; a template blob is loaded into
+    kernels/font."""
+    from paddleocr_spark.kernels import onnx_models
+    from paddleocr_spark.kernels.onnx_rt import session_for
+
     blob = weights_bc.value
-    from paddleocr_spark.kernels.onnx_models import (
-        is_onnx_bundle,
-        onnx_engine_models,
-        split_onnx_bundle,
-    )
-
-    if is_onnx_bundle(blob):
-        # ONNX bundle: materialize per-process cached sessions from the
-        # broadcast bytes (onnx_rt.session_for — the create_predictor
-        # analogue) and swap them into the worker's engine singleton for
-        # the duration of this task; restore after, since workers are
-        # reused across queries.
-        from paddleocr_spark.kernels.onnx_rt import session_for
-
-        engine = _get_engine()
-        parts = split_onnx_bundle(blob)
-        det_b, rec_b = parts[0], parts[1]
-        prev_models = (
-            engine.det_model,
-            engine.rec_model,
-            getattr(engine, "cls_model", None),
-        )
-        engine.det_model, engine.rec_model = onnx_engine_models(
-            det_b, rec_b, engine.cfg.det, engine.cfg.rec
-        )
-        if len(parts) > 2:  # three-model bundle: det + rec + cls
-            from paddleocr_spark.kernels.onnx_models import OnnxClsModel
-
-            engine.cls_model = OnnxClsModel(session_for(parts[2]))
-        try:
-            yield from _ocr_batches_run(batches, page_limit, orient)
-        finally:
-            engine.det_model, engine.rec_model, engine.cls_model = prev_models
-        return
-    from paddleocr_spark.kernels import font as _font
-
-    prev = _font.TEMPLATES
-    _font.load_weights(blob)
+    engine = _get_engine()
+    prev = (engine.det_model, engine.rec_model, engine.cls_model, font.TEMPLATES)
     try:
+        if onnx_models.is_onnx_bundle(blob):
+            parts = onnx_models.split_onnx_bundle(blob)
+            engine.det_model, engine.rec_model = onnx_models.onnx_engine_models(
+                parts[0], parts[1], engine.cfg.det, engine.cfg.rec
+            )
+            if len(parts) > 2:  # three-model bundle: det + rec + cls
+                engine.cls_model = onnx_models.OnnxClsModel(session_for(parts[2]))
+        else:
+            font.load_weights(blob)
         yield from _ocr_batches_run(batches, page_limit, orient)
     finally:
-        _font.TEMPLATES = prev
+        engine.det_model, engine.rec_model, engine.cls_model, font.TEMPLATES = prev
 
 
 _BINARY_MAGIC = (
@@ -141,131 +120,94 @@ def _sniff_html(payload: bytes) -> bool:
     )
 
 
+def _route(payload: bytes) -> str:
+    if _sniff_html(payload):
+        return "html"
+    if payload[:5] == b"%PDF-":
+        return "pdf_text"
+    return "scan"
+
+
+def _row(url, img_idx, text="", spans=None, decode_ms=0.0, det_ms=0.0, rec_ms=0.0):
+    spans = [] if spans is None else spans
+    return (url, img_idx, spans, text, len(spans), decode_ms, det_ms, rec_ms)
+
+
+def _ms_since(t0: float) -> float:
+    return (time.perf_counter() - t0) * 1000.0
+
+
+def _html_rows(url, payload, t0, page_limit, orient, engine):
+    """html-bearing page: DOM text-density main-content strip
+    (north_star's boilerplate branch) instead of the OCR chain — one
+    unified job handles Common-Crawl HTML and scanned PNG/PDF payloads
+    side by side. An extractor failure yields an empty page 0."""
+    try:
+        main = html_extract.extract_main_text(
+            payload.decode("utf-8", errors="replace")
+        )
+    except Exception:
+        main = ""
+    return [_row(url, 0, main, decode_ms=_ms_since(t0))]
+
+
+def _pdf_text_rows(url, payload, t0, page_limit, orient, engine):
+    """born-digital triage (the reference's text-vs-scan router,
+    kernels/pdf.pdf_text_pages): a PDF whose every page carries
+    text-show operators extracts WITHOUT OCR — the cheapest correct path
+    for the huge born-digital share of a web corpus. Any page without a
+    text layer (or a malformed PDF) falls through to the scan route;
+    mixed documents pay OCR rather than silently dropping their scanned
+    pages."""
+    try:
+        texts = pdf.pdf_text_pages(payload)
+    except Exception:
+        texts = None
+    if not texts or any(t is None for t in texts):
+        return _scan_rows(url, payload, t0, page_limit, orient, engine)
+    if page_limit:
+        texts = texts[:page_limit]
+    decode_ms = _ms_since(t0) / len(texts)
+    return [
+        _row(url, idx, text, decode_ms=decode_ms) for idx, text in enumerate(texts)
+    ]
+
+
+def _scan_rows(url, payload, t0, page_limit, orient, engine):
+    """Decode every page and run the OCR chain on it. `orient` adds the
+    fork's rotation sweep (fastapi_app.py:304-455), which multiplies
+    det cost, so it is opt-in. A payload that does not decode yields one
+    img_idx=-1 row."""
+    try:
+        pages = multipage.decode_payload(payload, page_limit)
+    except Exception:
+        return [_row(url, -1)]
+    decode_ms = _ms_since(t0) / max(len(pages), 1)
+    rows = []
+    for idx, img in enumerate(pages):
+        spans, det_s, rec_s = ocr.ocr_chain(img, engine, orient)
+        text = "\n".join(s["text"] for s in spans)
+        rows.append(
+            _row(url, idx, text, spans, decode_ms, det_s * 1000.0, rec_s * 1000.0)
+        )
+    return rows
+
+
+_ROUTES = {"html": _html_rows, "pdf_text": _pdf_text_rows, "scan": _scan_rows}
+
+
 def _ocr_batches_run(
     batches: Iterator[pd.DataFrame], page_limit: int, orient: bool = False
 ) -> Iterator[pd.DataFrame]:
-    from paddleocr_spark.kernels.cls import orient_page
-    from paddleocr_spark.kernels.det import detect_lines
-    from paddleocr_spark.kernels.geometry import sorted_boxes
-    from paddleocr_spark.kernels.multipage import decode_payload
-    from paddleocr_spark.kernels.ocr import get_rotate_crop_image
-    from paddleocr_spark.kernels.pdf import pdf_text_pages
-    from paddleocr_spark.kernels.rec import recognize_crops
-
-    from paddleocr_spark.operators.html_extract import extract_main_text
-
     engine = _get_engine()
-    for pdf in batches:
-        rows: list[dict] = []
-        for url, payload in zip(pdf["url"], pdf["html"]):
+    for batch in batches:
+        rows: list[tuple] = []
+        for url, payload in zip(batch["url"], batch["html"]):
             t0 = time.perf_counter()
             payload = bytes(payload)
-            if _sniff_html(payload):
-                # html-bearing page: DOM text-density main-content strip
-                # (north_star's boilerplate branch) instead of the OCR
-                # chain — one unified job handles Common-Crawl HTML and
-                # scanned PNG/PDF payloads side by side.
-                try:
-                    main = extract_main_text(
-                        payload.decode("utf-8", errors="replace")
-                    )
-                except Exception:
-                    main = ""
-                rows.append(
-                    dict(
-                        url=url, img_idx=0, spans=[],
-                        extracted_text=main, n_spans=0,
-                        decode_ms=(time.perf_counter() - t0) * 1000.0,
-                        det_ms=0.0, rec_ms=0.0,
-                    )
-                )
-                continue
-            if payload[:5] == b"%PDF-":
-                # born-digital triage (the reference's text-vs-scan
-                # router, kernels/pdf.pdf_text_pages): a PDF whose every
-                # page carries text-show operators extracts WITHOUT
-                # OCR — the cheapest correct path for the huge
-                # born-digital share of a web corpus. Any page without
-                # a text layer (or a malformed PDF) falls through to
-                # the scan path below; mixed documents pay OCR rather
-                # than silently dropping their scanned pages.
-                try:
-                    texts = pdf_text_pages(payload)
-                except Exception:
-                    texts = None
-                if texts and all(t is not None for t in texts):
-                    if page_limit:
-                        texts = texts[:page_limit]
-                    t1 = time.perf_counter()
-                    for idx, text in enumerate(texts):
-                        rows.append(
-                            dict(
-                                url=url, img_idx=idx, spans=[],
-                                extracted_text=text, n_spans=0,
-                                decode_ms=(t1 - t0) * 1000.0
-                                / max(len(texts), 1),
-                                det_ms=0.0, rec_ms=0.0,
-                            )
-                        )
-                    continue
-            try:
-                pages = decode_payload(payload, page_limit)
-            except Exception:
-                rows.append(
-                    dict(
-                        url=url, img_idx=-1, spans=[], extracted_text="",
-                        n_spans=0, decode_ms=0.0, det_ms=0.0, rec_ms=0.0,
-                    )
-                )
-                continue
-            t1 = time.perf_counter()
-            for idx, img in enumerate(pages):
-                d0 = time.perf_counter()
-                if orient:
-                    # fork's prioritized rotation sweep (fastapi_app.py
-                    # :304-455): try angles, score by rec confidence,
-                    # early-exit — multiplies det cost, so opt-in only.
-                    img, _angle = orient_page(
-                        img,
-                        lambda im: detect_lines(im, engine.det_model),
-                        get_rotate_crop_image,
-                        engine.rec_model,
-                        cls_model=getattr(engine, "cls_model", None),
-                    )
-                boxes, _ = detect_lines(img, engine.det_model)
-                boxes = sorted_boxes(boxes)
-                crops = [get_rotate_crop_image(img, b) for b in boxes]
-                d1 = time.perf_counter()
-                rec_res = recognize_crops(crops, engine.rec_model)
-                d2 = time.perf_counter()
-                spans = [
-                    {
-                        "box": [[float(x), float(y)] for x, y in b],
-                        "text": t,
-                        "score": float(s),
-                    }
-                    for b, (t, s) in zip(boxes, rec_res)
-                    if s >= engine.cfg.drop_score
-                ]
-                rows.append(
-                    dict(
-                        url=url,
-                        img_idx=idx,
-                        spans=spans,
-                        extracted_text="\n".join(s["text"] for s in spans),
-                        n_spans=len(spans),
-                        decode_ms=(t1 - t0) * 1000.0 / max(len(pages), 1),
-                        det_ms=(d1 - d0) * 1000.0,
-                        rec_ms=(d2 - d1) * 1000.0,
-                    )
-                )
-        yield pd.DataFrame(
-            rows,
-            columns=[
-                "url", "img_idx", "spans", "extracted_text", "n_spans",
-                "decode_ms", "det_ms", "rec_ms",
-            ],
-        )
+            handler = _ROUTES[_route(payload)]
+            rows += handler(url, payload, t0, page_limit, orient, engine)
+        yield pd.DataFrame(rows, columns=RESULT_COLUMNS)
 
 
 def salted_repartition(df: DataFrame, num_partitions: int) -> DataFrame:
@@ -295,8 +237,6 @@ def extract_pages(
     before inference — so a driver-side weight change genuinely
     propagates (tests/test_pipeline_spark.py pins this with perturbed
     weights on BOTH backends)."""
-    from paddleocr_spark.kernels.font import export_weights
-
     df = pages.select("url", "html")  # column prune before the shuffle
     if num_partitions:
         df = salted_repartition(df, num_partitions)
@@ -306,7 +246,7 @@ def extract_pages(
 
             weights = build_onnx_bundle()
         else:
-            weights = export_weights()
+            weights = font.export_weights()
     bc = pages.sparkSession.sparkContext.broadcast(weights)
     return df.mapInPandas(
         lambda it: _ocr_batches(it, page_limit, orient, bc),

@@ -229,6 +229,35 @@ def test_main_inprocess_never_stops_a_shared_session(spark, tmp_path):
     assert spark.range(3).count() == 3
 
 
+def test_main_in_another_thread_never_stops_the_default_session(spark, tmp_path):
+    """getActiveSession() is thread-local: in a thread that never used the
+    shared session it is None, yet getOrCreate() still returns that
+    process-wide default session. main() must count it as pre-existing
+    too, or its exit path stops the shared JVM."""
+    import threading
+
+    from pyspark.sql import SparkSession
+
+    from paddleocr_spark.job import main
+
+    seen = {}
+
+    def worker():
+        seen["active"] = SparkSession.getActiveSession()
+        seen["rc"] = main([
+            "--sf-dir", "/root/testdata/sf0.001",
+            "--results", str(tmp_path / "r"),
+            "--audit", str(tmp_path / "a"),
+            "--wat", str(tmp_path / "w"), "--page-limit", "1",
+        ])
+
+    t = threading.Thread(target=worker)
+    t.start()
+    t.join()
+    assert seen == {"active": None, "rc": 2}
+    assert spark.range(3).count() == 3  # the JVM handle is alive
+
+
 def test_wat_happy_path_over_html_warc(spark, tmp_path):
     """--warc of HTML response records + --wat: the sniff admits HTML,
     extraction routes payloads through the DOM main-content strip (not

@@ -761,3 +761,32 @@ class TestMobileDetGraph:
         from paddleocr_spark.kernels.onnx_models import build_det_onnx_mobile
 
         assert build_det_onnx_mobile(seed=0)[0] != build_det_onnx_mobile(seed=1)[0]
+
+
+# Two upside-down benchmark pages (rotated_onnx seed 8 doc 8000037 and
+# seed 25 doc 25000012) on which a 90/270 cls probe outscored the correct
+# 180 one (mean p(0) 0.535 vs 0.518, 0.551 vs 0.517) while the geometric
+# axis vote was right: the sweep must stay on the voted axis.
+AXIS_TRAP_PAGES = [
+    "HASHBATCHFILTERSORTBATCHJOINBATCHCUSTOMERVALUEFASTROWBATCHBIGROWSTREAM"
+    "WINDOWTABLEMERGESLOWDUPLINEVECTORVECTORSMALLBATCHS",
+    "JOINWINDOWVECTORDATAMERGEWINDOWCUSTOMERVALUEASMALLSMALLKEYROWSMALLSLOW"
+    "COLUMNORDERKEYTHEORDERSCANALINEVECTORDATAFILTERSCA",
+]
+
+
+@pytest.mark.parametrize("norm", AXIS_TRAP_PAGES)
+def test_orient_sweep_keeps_the_voted_axis(cls_model, norm):
+    from paddleocr_spark.kernels.cls import orient_page
+    from paddleocr_spark.kernels.imageops import rotate180
+    from paddleocr_spark.kernels.ocr import OcrEngine, get_rotate_crop_image
+    from paddleocr_spark.sources.pages import wrap_lines
+
+    lines = wrap_lines(norm)
+    page = font.render_page(lines)
+    img, angle = orient_page(
+        rotate180(page), lambda im: detect_lines(im), get_rotate_crop_image,
+        cls_model=cls_model,
+    )
+    assert angle == 180
+    assert OcrEngine().extract_text(img) == "\n".join(lines)

@@ -31,6 +31,21 @@ def test_free_space_floor(monkeypatch):
         assert tmpfs_shuffle_dir() == "/dev/shm/spark_graft_shuffle"
 
 
+def test_malformed_floor_falls_back_to_default(monkeypatch):
+    free = 10 * MIN_FREE_BYTES
+
+    class Stat:
+        f_bavail, f_frsize = free, 1
+
+    monkeypatch.setattr(os, "statvfs", lambda _path: Stat)
+    monkeypatch.setattr(os.path, "isdir", lambda _path: True)
+    monkeypatch.setattr(os, "access", lambda _path, _mode: True)
+    monkeypatch.setenv("SPARK_GRAFT_TMPFS_MIN_FREE", "4GiB")
+    assert tmpfs_shuffle_dir() == "/dev/shm/spark_graft_shuffle"
+    Stat.f_bavail = MIN_FREE_BYTES - 1
+    assert tmpfs_shuffle_dir() is None
+
+
 def test_statvfs_failure_is_safe(monkeypatch):
     def boom(_path):
         raise OSError("statvfs unavailable")

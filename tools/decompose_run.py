@@ -1,12 +1,12 @@
 """Bare-metal kernel-pool control for the scaling decomposition.
 
-Runs the EXACT extraction kernel chain (payload decode -> det ->
-reading-order sort -> crop -> rec -> CTC) over the same materialized
-pages corpus the Spark scaling pairs use, in a plain multiprocessing
-pool — no Spark, no JVM, no Arrow. Comparing this pool's N -> 4N
-efficiency against the Spark job's separates three effects the north
-rule's cluster criterion needs separated on a shared single-host
-sandbox:
+Runs the EXACT extraction kernel chain (payload decode ->
+kernels/ocr.ocr_chain: det -> reading-order sort -> crop -> rec -> CTC ->
+drop_score) over the same materialized pages corpus the Spark scaling
+pairs use, in a plain multiprocessing pool — no Spark, no JVM, no Arrow.
+Comparing this pool's N -> 4N efficiency against the Spark job's
+separates three effects the north rule's cluster criterion needs
+separated on a shared single-host sandbox:
 
 1. host oversubscription (the pool can't scale past what the VM gives —
    bracket with bench.py's ALU probe);
@@ -33,25 +33,18 @@ _ENGINE = None
 
 
 def _work(payloads: list[bytes]) -> int:
-    """The per-page chain of plans/pipeline._ocr_batches_run, minus the
-    Spark wrapper: one engine singleton per pool process, same kernels,
-    same call order."""
+    """The scan route of plans/pipeline._ocr_batches_run, minus the
+    Spark wrapper: one engine singleton per pool process, same chain."""
     global _ENGINE
-    from paddleocr_spark.kernels.det import detect_lines
-    from paddleocr_spark.kernels.geometry import sorted_boxes
     from paddleocr_spark.kernels.multipage import decode_payload
-    from paddleocr_spark.kernels.ocr import OcrEngine, get_rotate_crop_image
-    from paddleocr_spark.kernels.rec import recognize_crops
+    from paddleocr_spark.kernels.ocr import OcrEngine, ocr_chain
 
     if _ENGINE is None:
         _ENGINE = OcrEngine()
     n = 0
     for payload in payloads:
         for img in decode_payload(payload, 0):
-            boxes, _ = detect_lines(img, _ENGINE.det_model)
-            boxes = sorted_boxes(boxes)
-            crops = [get_rotate_crop_image(img, b) for b in boxes]
-            recognize_crops(crops, _ENGINE.rec_model)
+            ocr_chain(img, _ENGINE)
             n += 1
     return n
 
